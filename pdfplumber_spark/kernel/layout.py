@@ -560,11 +560,3 @@ def search_text(
     if return_chars:
         cols.append("chars")
     return pd.DataFrame(rows, columns=cols)
-
-
-def extract_text_lines_frame(
-    text: str, provenance: np.ndarray, chars: pd.DataFrame, strip: bool = True
-) -> pd.DataFrame:
-    """Line records from a layout textmap (``text.py:212-230``)."""
-    pat = r" *([^\n]+?) *(\n|$)" if strip else r"([^\n]+)"
-    return search_text(text, provenance, chars, pat, main_group=1)

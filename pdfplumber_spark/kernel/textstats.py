@@ -1,5 +1,5 @@
-"""Corpus text-analysis kernels: language ID, quality scoring, token
-counting, fingerprinting, shingling / MinHash / SimHash.
+"""Corpus text-analysis kernels: the token pattern and language profiles
+the SQL operators share, fingerprinting, shingling / MinHash / SimHash.
 
 All functions are vectorized over pandas Series / numpy arrays and are
 deterministic — the Spark operators in ``operators/`` call them Arrow-batched;
@@ -23,17 +23,6 @@ import pandas as pd
 # (same shape as the GPT-2 pre-tokenizer regex family, simplified to stdlib re)
 TOKEN_RE = re.compile(r"[A-Za-z]+|[0-9]+|[^\sA-Za-z0-9]")
 
-
-def count_tokens(texts: pd.Series) -> np.ndarray:
-    """BPE-ish token counts per text (regex pre-tokenization)."""
-    return texts.fillna("").str.count(TOKEN_RE.pattern).to_numpy(np.int64)
-
-
-def count_ws_tokens(texts: pd.Series) -> np.ndarray:
-    """Whitespace token counts."""
-    return texts.fillna("").str.split().str.len().fillna(0).to_numpy(np.int64)
-
-
 # --- language ID ------------------------------------------------------------
 
 # tiny stopword profiles (top function words) — n-gram-free heuristic that is
@@ -44,66 +33,6 @@ LANG_PROFILES = {
     "fr": {"le", "la", "les", "et", "de", "des", "un", "une", "est", "que"},
     "es": {"el", "la", "los", "las", "de", "que", "y", "en", "un", "es"},
 }
-
-_WORD_RE = re.compile(r"[a-zA-ZäöüßéèêàâçñáíóúÄÖÜ]+")
-
-
-def detect_language(texts: pd.Series) -> pd.Series:
-    """Best-scoring stopword profile per text; 'und' (unknown) if no hits."""
-    out = []
-    for t in texts.fillna(""):
-        words = [w.lower() for w in _WORD_RE.findall(t)]
-        if not words:
-            out.append("und")
-            continue
-        best_lang, best_hits = "und", 0
-        for lang, prof in LANG_PROFILES.items():
-            hits = sum(1 for w in words if w in prof)
-            if hits > best_hits:
-                best_lang, best_hits = lang, hits
-        out.append(best_lang)
-    return pd.Series(out, index=texts.index, dtype=object)
-
-
-# --- quality scoring --------------------------------------------------------
-
-def quality_features(texts: pd.Series) -> pd.DataFrame:
-    """Shallow quality features (Gopher/C4-style heuristics, public rules):
-    n_chars, n_words, mean_word_len, alpha_ratio, punct_ratio, stop_ratio,
-    and a composite [0,1] quality score."""
-    s = texts.fillna("")
-    n_chars = s.str.len().to_numpy(np.int64)
-    words = s.str.split()
-    n_words = words.str.len().fillna(0).to_numpy(np.int64)
-    total_word_chars = s.str.count(r"\S").to_numpy(np.int64)
-    mean_word_len = np.where(n_words > 0, total_word_chars / np.maximum(n_words, 1), 0.0)
-    alpha = s.str.count(r"[A-Za-z]").to_numpy(np.int64)
-    punct = s.str.count(r"[^\w\s]").to_numpy(np.int64)
-    alpha_ratio = np.where(n_chars > 0, alpha / np.maximum(n_chars, 1), 0.0)
-    punct_ratio = np.where(n_chars > 0, punct / np.maximum(n_chars, 1), 0.0)
-    stop_hits = (
-        s.str.lower().str.count(r"\b(?:the|and|of|to|in|is|that|it|for|was)\b")
-        .to_numpy(np.int64)
-    )
-    stop_ratio = np.where(n_words > 0, stop_hits / np.maximum(n_words, 1), 0.0)
-    score = (
-        0.25 * np.clip(n_words / 100.0, 0, 1)
-        + 0.25 * np.clip(alpha_ratio / 0.7, 0, 1)
-        + 0.25 * (1.0 - np.clip(punct_ratio / 0.3, 0, 1))
-        + 0.25 * np.clip((mean_word_len - 2.0) / 6.0, 0, 1)
-    )
-    return pd.DataFrame(
-        {
-            "n_chars": n_chars,
-            "n_words": n_words,
-            "mean_word_len": mean_word_len,
-            "alpha_ratio": alpha_ratio,
-            "punct_ratio": punct_ratio,
-            "stop_ratio": stop_ratio,
-            "quality_score": score,
-        },
-        index=texts.index,
-    )
 
 
 # --- hashing / fingerprints -------------------------------------------------
@@ -120,15 +49,6 @@ def fnv1a_64(data: bytes) -> int:
         h ^= b
         h = (h * 0x100000001B3) & 0xFFFFFFFFFFFFFFFF
     return h
-
-
-def fingerprint64(texts: pd.Series) -> np.ndarray:
-    """Per-text 64-bit content fingerprint (FNV-1a over utf-8 bytes),
-    returned as int64 (reinterpreted) for parquet friendliness."""
-    out = np.empty(len(texts), dtype=np.uint64)
-    for i, t in enumerate(texts.fillna("")):
-        out[i] = fnv1a_64(t.encode("utf-8"))
-    return out.view(np.int64)
 
 
 def shingles(text: str, k: int = 5) -> List[str]:
@@ -296,18 +216,6 @@ def simhash64_batch(texts) -> np.ndarray:
     vals = (acc > 0).astype(np.uint64) << np.arange(64, dtype=np.uint64)
     out[nz] = vals.sum(axis=1, dtype=np.uint64).view(np.int64)
     return out
-
-
-def hamming64(a: int, b: int) -> int:
-    return bin((a ^ b) & 0xFFFFFFFFFFFFFFFF).count("1")
-
-
-def ngram_set(text: str, n: int = 3) -> set:
-    """Character n-grams of the lowercased text."""
-    t = text.lower()
-    if len(t) < n:
-        return {t} if t else set()
-    return {t[i : i + n] for i in range(len(t) - n + 1)}
 
 
 def jaccard(a: set, b: set) -> float:

@@ -497,24 +497,28 @@ def extract_words_ca(
     return pd.DataFrame(data, columns=cols), char_word_id, char_word_pos
 
 
-def dedupe_chars_frame(chars: pd.DataFrame, tolerance: float = 1) -> pd.DataFrame:
-    """Drop near-duplicate chars (``text.py:784-804``).
+def dedupe_keep_mask(
+    fontname, size, upright, text, doctop, x0, tolerance: float = 1
+) -> np.ndarray:
+    """Keep-mask of dedupe_chars (``text.py:784-804``) over char columns.
 
     Within each (fontname, size, upright, text) group, cluster positions on
     doctop then x0 (chained, tolerance) and keep the (doctop, x0)-minimum of
-    each 2-D cluster; output restored to ingestion order.
-    """
-    if len(chars) == 0:
-        return chars
-    df = chars.reset_index(drop=True)
+    each 2-D cluster. Chars with a null key belong to no group and are
+    dropped."""
     key_cols = ["fontname", "size", "upright", "text"]
-    keep = np.zeros(len(df), dtype=bool)
-    dt_all = df["doctop"].to_numpy(np.float64)
-    x0_all = df["x0"].to_numpy(np.float64)
-    for _, grp in df.groupby(key_cols, sort=False):
+    keys = pd.DataFrame({
+        "fontname": np.asarray(fontname, dtype=object),
+        "size": np.asarray(size),
+        "upright": np.asarray(upright),
+        "text": np.asarray(text, dtype=object),
+    })
+    keep = np.zeros(len(keys), dtype=bool)
+    dt_all = np.asarray(doctop, dtype=np.float64)
+    x0_all = np.asarray(x0, dtype=np.float64)
+    for _, grp in keys.groupby(key_cols, sort=False):
         rows = grp.index.to_numpy()
-        dt = dt_all[rows]
-        ycl = assign_clusters(dt, tolerance)
+        ycl = assign_clusters(dt_all[rows], tolerance)
         for yc in np.unique(ycl):
             sub = rows[ycl == yc]
             xcl = assign_clusters(x0_all[sub], tolerance)
@@ -522,4 +526,16 @@ def dedupe_chars_frame(chars: pd.DataFrame, tolerance: float = 1) -> pd.DataFram
                 cell = sub[xcl == xc]
                 k = np.lexsort((x0_all[cell], dt_all[cell]))[0]
                 keep[cell[k]] = True
-    return df[keep]
+    return keep
+
+
+def dedupe_chars_frame(chars: pd.DataFrame, tolerance: float = 1) -> pd.DataFrame:
+    """Drop near-duplicate chars (``text.py:784-804``, ``dedupe_keep_mask``);
+    output in ingestion order."""
+    if len(chars) == 0:
+        return chars
+    df = chars.reset_index(drop=True)
+    return df[dedupe_keep_mask(
+        df["fontname"], df["size"], df["upright"], df["text"],
+        df["doctop"], df["x0"], tolerance,
+    )]

@@ -113,24 +113,6 @@ def with_cluster_id(
     return df.withColumn(out_col, F.sum(F.coalesce(gap, F.lit(0))).over(w))
 
 
-def cluster_agg(
-    df: DataFrame,
-    value_col: str,
-    tolerance: float,
-    partition_cols: Sequence[str] = (),
-) -> DataFrame:
-    """Cluster then aggregate: per cluster emit count/min/max/mean of the
-    value — the distributed ``cluster_list`` + per-cluster stats."""
-    pcols = list(partition_cols)
-    cl = with_cluster_id(df, value_col, tolerance, pcols)
-    return cl.groupBy(*pcols, "cluster_id").agg(
-        F.count("*").alias("n"),
-        F.min(value_col).alias("min_val"),
-        F.max(value_col).alias("max_val"),
-        F.avg(value_col).alias("mean_val"),
-    )
-
-
 def snap_to_cluster_mean(
     df: DataFrame,
     value_col: str,

@@ -31,16 +31,8 @@ def within_pred(bbox) -> Column:
     )
 
 
-def filter_intersecting(df: DataFrame, bbox) -> DataFrame:
-    return df.where(overlap_pred(bbox))
-
-
 def filter_within(df: DataFrame, bbox) -> DataFrame:
     return df.where(within_pred(bbox))
-
-
-def filter_outside(df: DataFrame, bbox) -> DataFrame:
-    return df.where(~overlap_pred(bbox))
 
 
 def crop(df: DataFrame, bbox) -> DataFrame:
@@ -110,25 +102,6 @@ def rects_to_edges_df(rects: DataFrame) -> DataFrame:
     return rects.select(*keys, edge).select(*keys, "e.*").withColumn(
         "object_type", F.lit("rect_edge")
     )
-
-
-def filter_edges_df(
-    edges: DataFrame,
-    orientation: str = None,
-    edge_type: str = None,
-    min_length: float = 1.0,
-) -> DataFrame:
-    """``filter_edges`` (``geometry.py:263-278``): length axis depends on
-    orientation."""
-    length = F.when(
-        F.col("orientation") == "v", F.col("height")
-    ).otherwise(F.col("width"))
-    out = edges.where(length >= F.lit(float(min_length)))
-    if orientation is not None:
-        out = out.where(F.col("orientation") == orientation)
-    if edge_type is not None:
-        out = out.where(F.col("object_type") == edge_type)
-    return out
 
 
 def edge_intersections_df(

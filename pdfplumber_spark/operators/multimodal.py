@@ -17,11 +17,11 @@ Reference analogue: PIL decode in display.py:36-90.
 from __future__ import annotations
 
 import hashlib
-from typing import Iterator
 
 import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame, functions as F, types as T
+from pyspark.sql import DataFrame, types as T
+
+from ..plans.extract import map_payloads
 
 IMAGE_META_SCHEMA = T.StructType(
     [
@@ -32,14 +32,6 @@ IMAGE_META_SCHEMA = T.StructType(
         T.StructField("height", T.IntegerType(), True),
         T.StructField("channels", T.IntegerType(), True),
         T.StructField("sha256", T.StringType(), True),
-        T.StructField("status", T.StringType(), False),
-    ]
-)
-
-FEATURE_SCHEMA = T.StructType(
-    [
-        T.StructField("url", T.StringType(), False),
-        T.StructField("feature", T.ArrayType(T.FloatType()), True),
         T.StructField("status", T.StringType(), False),
     ]
 )
@@ -76,40 +68,15 @@ def _payload_to_image_row(url, payload) -> tuple:
         return (url, len(data), fmt, None, None, None, sha, "error")
 
 
-def _spread_payloads(
-    df: DataFrame, url_col: str, bin_col: str, num_partitions: int | None
-) -> DataFrame:
-    """Url-hash repartition before a per-payload decode kernel. Decode cost
-    scales with payload complexity, not byte count — a single-row-group
-    parquet scan of a KB-sized corpus is ONE input split, so without this
-    exchange every decode below would run in one task (measured: the whole
-    render_png board row serialized on one core). Count defaults to the
-    scale-adaptive cluster-derived value (plans.extract.default_doc_partitions)."""
-    from ..plans.extract import default_doc_partitions
-
-    src = df.select(url_col, bin_col)
-    # factor=2: decode cost per doc is strongly skewed (page counts,
-    # raster sizes) — twice the core count rebalances the tail
-    n = num_partitions or default_doc_partitions(src, factor=2)
-    return src.repartition(n, F.xxhash64(url_col))
-
-
 def image_metadata(
     df: DataFrame, url_col: str = "url", bin_col: str = "html",
     num_partitions: int | None = None,
 ) -> DataFrame:
     """binary column -> typed metadata rows (mapInPandas, Arrow-batched)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            rows = [
-                _payload_to_image_row(url, payload)
-                for url, payload in zip(b[url_col], b[bin_col])
-            ]
-            yield pd.DataFrame(rows, columns=[f.name for f in IMAGE_META_SCHEMA.fields])
-
-    return _spread_payloads(df, url_col, bin_col, num_partitions).mapInPandas(
-        run, schema=IMAGE_META_SCHEMA
+    return map_payloads(
+        df, lambda url, payload: [_payload_to_image_row(url, payload)],
+        IMAGE_META_SCHEMA, url_col=url_col, bin_col=bin_col, factor=2,
+        num_partitions=num_partitions,
     )
 
 
@@ -130,8 +97,6 @@ IMAGE_STATS_SCHEMA = T.StructType(
         T.StructField("status", T.StringType(), False),
     ]
 )
-
-_STATS_COLS = [f.name for f in IMAGE_STATS_SCHEMA.fields]
 
 
 def _image_stat_rows(url, payload) -> list:
@@ -186,44 +151,9 @@ def pdf_image_stats(
     this costs a full (style-free) page parse per doc — the price of
     reference semantics; the resource-walk shortcut remains as the
     fallback for uninterpretable streams."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            rows = []
-            for url, payload in zip(b[url_col], b[bin_col]):
-                rows.extend(_image_stat_rows(url, payload))
-            yield pd.DataFrame(rows, columns=_STATS_COLS)
-
-    return _spread_payloads(df, url_col, bin_col, num_partitions).mapInPandas(
-        run, schema=IMAGE_STATS_SCHEMA
-    )
-
-
-def binary_features(
-    df: DataFrame, url_col: str = "url", bin_col: str = "html", dim: int = 16,
-    num_partitions: int | None = None,
-) -> DataFrame:
-    """Deterministic byte-histogram feature vector per payload — the fake
-    stand-in for an image-embedding model, with the real batch shape."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            rows = []
-            for url, payload in zip(b[url_col], b[bin_col]):
-                if payload is None:
-                    rows.append((url, None, "error"))
-                    continue
-                arr = np.frombuffer(bytes(payload), dtype=np.uint8)
-                if len(arr) == 0:
-                    rows.append((url, [0.0] * dim, "ok"))
-                    continue
-                hist, _ = np.histogram(arr, bins=dim, range=(0, 256))
-                feat = (hist / max(1, len(arr))).astype(np.float32)
-                rows.append((url, feat.tolist(), "ok"))
-            yield pd.DataFrame(rows, columns=["url", "feature", "status"])
-
-    return _spread_payloads(df, url_col, bin_col, num_partitions).mapInPandas(
-        run, schema=FEATURE_SCHEMA
+    return map_payloads(
+        df, _image_stat_rows, IMAGE_STATS_SCHEMA, url_col=url_col,
+        bin_col=bin_col, factor=2, num_partitions=num_partitions,
     )
 
 
@@ -283,14 +213,8 @@ def render_debug_png(
     row per page with PNG dimensions + sha256. mapInPandas over the
     url-hash partitioning — render is per-doc independent, so the plan
     is embarrassingly parallel; the PNG payload is hashed, not shuffled."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            rows = []
-            for url, payload in zip(b[url_col], b[bin_col]):
-                rows.extend(_render_rows(url, payload, resolution))
-            yield pd.DataFrame(rows, columns=_RENDER_COLS)
-
-    return _spread_payloads(df, url_col, bin_col, num_partitions).mapInPandas(
-        run, schema=RENDER_SCHEMA
+    return map_payloads(
+        df, lambda url, payload: _render_rows(url, payload, resolution),
+        RENDER_SCHEMA, url_col=url_col, bin_col=bin_col, factor=2,
+        num_partitions=num_partitions,
     )

@@ -35,12 +35,6 @@ def _norm(a):
     )
 
 
-def with_cosine(df: DataFrame, a: str, b: str, out: str = "cosine") -> DataFrame:
-    return df.withColumn(
-        out, _dot(F.col(a), F.col(b)) / (_norm(F.col(a)) * _norm(F.col(b)))
-    )
-
-
 def cosine_topk(
     embeddings: DataFrame,
     queries: DataFrame,
@@ -82,24 +76,6 @@ def cosine_topk(
 def random_hyperplanes(dim: int, n_planes: int, seed: int = 20260816) -> np.ndarray:
     rng = np.random.default_rng(seed)
     return rng.standard_normal((n_planes, dim))
-
-
-def lsh_bucket_col(vec_col, planes: np.ndarray):
-    """Sign-bit bucket id from fixed hyperplanes — pure column expr."""
-    bits = None
-    for i, p in enumerate(planes):
-        proj = F.aggregate(
-            F.zip_with(
-                vec_col,
-                F.array(*[F.lit(float(v)) for v in p]),
-                lambda x, y: x.cast("double") * y,
-            ),
-            F.lit(0.0).cast("double"),
-            lambda acc, v: acc + v,
-        )
-        bit = F.when(proj >= 0, F.lit(1 << i)).otherwise(F.lit(0))
-        bits = bit if bits is None else bits + bit
-    return bits
 
 
 def lsh_topk(

@@ -9,21 +9,12 @@ from __future__ import annotations
 
 from typing import Iterator
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F, types as T
 
 from ..kernel.textstats import LANG_PROFILES, TOKEN_RE
+from ..plans.extract import spread
 
-
-def _spread_by_id(df: DataFrame, id_col: str) -> DataFrame:
-    """Hash-repartition on the id before a per-row Python kernel: the
-    bench corpus tables are single-row-group parquet files (one input
-    split), so without an exchange the kernel below runs in ONE task no
-    matter the cluster size. Count is cluster-derived (2x cores), the
-    same scale rule as plans.extract.default_doc_partitions."""
-    n = df.sparkSession.sparkContext.defaultParallelism * 2
-    return df.repartition(n, F.col(id_col))
 
 # Java + RE2 compatible token pattern (same semantics both engines)
 TOKEN_PATTERN = TOKEN_RE.pattern
@@ -209,7 +200,7 @@ def winnow_table(
 
     schema = T.StructType(
         [
-            T.StructField("doc_id", T.LongType(), False),
+            T.StructField("doc_id", df.schema[id_col].dataType, False),
             T.StructField("fingerprint", T.LongType(), False),
         ]
     )
@@ -218,14 +209,10 @@ def winnow_table(
         for b in batches:
             ix, fps = winnow_fingerprints_batch(list(b[text_col]), k=k, w=w)
             yield pd.DataFrame(
-                {"doc_id": b[id_col].to_numpy(np.int64)[ix],
-                 "fingerprint": fps}
+                {"doc_id": b[id_col].iloc[ix].to_numpy(), "fingerprint": fps}
             )
 
-    # single-row-group corpus files scan as ONE split — spread docs by id
-    # before the hash kernel so it parallelizes (guide: repartition right
-    # after an unsplittable read; count derives from the cluster)
-    src = _spread_by_id(df.select(id_col, text_col), id_col)
+    src = spread(df.select(id_col, text_col), F.col(id_col), factor=2)
     return src.mapInPandas(run, schema=schema)
 
 
@@ -343,24 +330,4 @@ def quality_filter(
         id_col,
         reason.isNull().alias("keep"),
         reason.alias("reject_reason"),
-    )
-
-
-def with_fingerprint(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """64-bit FNV-1a content fingerprint via the Arrow kernel + md5 (SQL
-    parity column)."""
-    from ..kernel.textstats import fingerprint64
-
-    schema = T.StructType(
-        df.schema.fields + [T.StructField("fingerprint", T.LongType(), True)]
-    )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            b = b.copy()
-            b["fingerprint"] = fingerprint64(b[text_col])
-            yield b
-
-    return df.mapInPandas(run, schema=schema).withColumn(
-        "content_md5", F.md5(F.col(text_col))
     )

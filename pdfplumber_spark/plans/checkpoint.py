@@ -110,12 +110,15 @@ def run_extraction_checkpointed(
         ext.write.mode("overwrite").parquet(bucket_dir)
         # gather metrics from the written data (no second extraction pass)
         written = spark.read.parquet(bucket_dir)
+        # an empty bucket sums to NULL: coalesce so the manifest holds 0
         agg = written.agg(
             F.count("*").alias("pages"),
-            F.sum(F.when(F.col("status") == "ok", 1).otherwise(0)).alias("pages_ok"),
+            F.coalesce(
+                F.sum(F.when(F.col("status") == "ok", 1).otherwise(0)), F.lit(0)
+            ).alias("pages_ok"),
             F.countDistinct("url").alias("urls"),
-            F.sum(
-                F.when(F.col("status") != "ok", 1).otherwise(0)
+            F.coalesce(
+                F.sum(F.when(F.col("status") != "ok", 1).otherwise(0)), F.lit(0)
             ).alias("pages_failed"),
         ).collect()[0]
         manifest = {

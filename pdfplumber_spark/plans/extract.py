@@ -3,12 +3,15 @@ tables DataFrames.
 
 Physical design (SURVEY.md §3.1, §4):
 
-- ONE shuffle total: ``repartition(xxhash64(url))`` right after the scan
-  spreads documents evenly; every downstream operator is partition-local
-  (all reference joins are page-local — SURVEY.md §2.3).
-- ``mapInPandas`` runs the Arrow-batched kernels; whole-document parse and
-  per-page text assembly happen inside one task — text extraction is a
-  single-pass, shuffle-free plan.
+- ONE shuffle total: ``spread`` hash-repartitions on ``xxhash64(url)``
+  right after the scan so documents spread evenly; every downstream
+  operator is partition-local (all reference joins are page-local —
+  SURVEY.md §2.3).
+- ``map_payloads`` builds the per-payload plans: spread, then
+  ``mapInPandas`` over (url, payload) calling a ``_payload_to_*`` kernel
+  entry (the same functions serve as the single-process oracles).
+  Whole-document parse and per-page text assembly happen inside one
+  task — text extraction is a single-pass, shuffle-free plan.
 - Binary payloads are sniffed (%PDF- magic) and routed to the PDF or HTML
   kernel; malformed payloads yield ``status='error'`` rows with a reason
   instead of failing the job (reference analogue: the repair path,
@@ -21,14 +24,13 @@ Physical design (SURVEY.md §3.1, §4):
 from __future__ import annotations
 
 import traceback
-from typing import Iterator, Optional
+from typing import Callable, Iterator, Optional
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, functions as F, types as T
 
 from ..kernel.htmlstrip import extract_main_text_bytes
-from ..kernel.layout import page_text
 from ..kernel.pdfparse import pdf_to_frames
 from ..kernel.words import WordSettings, extract_words_frame
 from ..schemas import EXTRACTED_SCHEMA, OBJECTS_SCHEMA, TABLES_SCHEMA, WORDS_SCHEMA
@@ -43,30 +45,60 @@ def read_pages(spark, path: str) -> DataFrame:
     return spark.read.parquet(path)
 
 
-def default_doc_partitions(df: DataFrame, factor: int = 1) -> int:
-    """Scale-adaptive partition count for per-document kernel stages:
-    the running cluster's core count times ``factor``
-    (``defaultParallelism`` tracks the executor fleet, so the same code
-    parallelizes local[2] tests and a 1000-executor cluster). An EXPLICIT
-    count matters here: a keyless ``repartition(hash)`` inherits
-    ``spark.sql.shuffle.partitions`` and is then AQE-coalescible by
-    BYTES — a small-bytes corpus of expensive payloads (PDFs are KBs of
-    input but seconds of kernel work) would collapse to one task.
-    ``factor=1`` for parse-weight kernels (measured best: extra task
-    waves cost more than they balance); callers with strongly skewed
-    per-doc cost (rasterization) pass ``factor=2``."""
-    return df.sparkSession.sparkContext.defaultParallelism * factor
+def spread(df: DataFrame, *keys, factor: int = 1,
+           num_partitions: Optional[int] = None) -> DataFrame:
+    """Hash-repartition ``df`` on ``keys`` (columns or names, passed through
+    as given) into ``num_partitions`` or the running cluster's core count
+    times ``factor``.
+
+    Inputs are single-row-group parquet files (one split), so without this
+    exchange every per-row kernel runs in ONE task. The count is explicit
+    because a keyless or default-count repartition inherits
+    ``spark.sql.shuffle.partitions`` and is then AQE-coalescible by BYTES:
+    a small-bytes corpus of expensive payloads (PDFs are KBs of input but
+    seconds of kernel work) would collapse to one task.
+    ``defaultParallelism`` tracks the executor fleet, so the same code
+    parallelizes local[2] tests and a 1000-executor cluster. ``factor=1``
+    for parse-weight kernels and light per-row expressions (measured best:
+    extra waves of tasks cost more than they balance); ``factor=2`` for
+    kernels with strongly skewed per-row cost (rasterization, image
+    decode, hash kernels over documents of very different lengths)."""
+    n = num_partitions or df.sparkSession.sparkContext.defaultParallelism * factor
+    return df.repartition(n, *keys)
 
 
-def partition_by_url(df: DataFrame, num_partitions: Optional[int] = None) -> DataFrame:
-    """THE shuffle of the pipeline: spread documents by url hash.
+def map_payloads(
+    df: DataFrame,
+    fn: Callable[[str, object], list],
+    schema: T.StructType,
+    url_col: str = "url",
+    bin_col: str = "html",
+    factor: int = 1,
+    num_partitions: Optional[int] = None,
+) -> DataFrame:
+    """The per-payload plan: ``spread`` on ``xxhash64(url_col)``, then one
+    ``mapInPandas`` calling ``fn(url, payload)`` for every row. ``fn``
+    returns a list of row tuples or a list of frames, in ``schema`` column
+    order; per-doc decode cost, not byte count, is the load unit."""
+    cols = [f.name for f in schema.fields]
 
-    ``num_partitions=None`` sizes the exchange from the cluster
-    (``default_doc_partitions``) rather than from data bytes — per-doc
-    decode cost, not byte count, is the load unit of this pipeline."""
-    if not num_partitions:
-        num_partitions = default_doc_partitions(df)
-    return df.repartition(num_partitions, F.xxhash64("url"))
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for batch in batches:
+            out = []
+            for url, payload in zip(batch[url_col], batch[bin_col]):
+                out.extend(fn(url, payload))
+            if out and isinstance(out[0], pd.DataFrame):
+                yield pd.concat(out, ignore_index=True)
+            else:
+                yield pd.DataFrame(out, columns=cols)
+
+    src = spread(df.select(url_col, bin_col), F.xxhash64(url_col),
+                 factor=factor, num_partitions=num_partitions)
+    return src.mapInPandas(run, schema=schema)
+
+
+def _as_list(frame: Optional[pd.DataFrame]) -> list:
+    return [] if frame is None else [frame]
 
 
 # --- single-pass text extraction -------------------------------------------
@@ -109,69 +141,46 @@ def _payload_to_text_rows(
 def _payload_rows_inner(url: str, data: bytes, layout: bool, dedupe: bool) -> list:
     try:
         if data[:5] == b"%PDF-":
-            if not dedupe:
-                # fast path: parser buffers -> CharArrays, no pandas
-                # (both plain and layout=True branches)
-                import numpy as np
+            # parser buffers -> CharArrays, no pandas for the char table
+            from ..kernel.layout import page_text_ca, page_text_layout_ca
+            from ..kernel.pdfparse import parse_pdf
+            from ..kernel.words import CharArrays, dedupe_keep_mask
 
-                from ..kernel.layout import page_text_ca, page_text_layout_ca
-                from ..kernel.pdfparse import parse_pdf
-                from ..kernel.words import CharArrays
-
-                interps = parse_pdf(data, style=False)
-                if not interps:
-                    return [(url, 0, None, None, None, "error", "unparseable pdf")]
-                rows = []
-                for it in interps:
-                    n = it.n_chars
-                    if n:
-                        nums = np.frombuffer(
-                            it.ch_num, dtype=np.float64
-                        ).reshape(n, 12)
-                        ca = CharArrays.from_arrays(it.ch_text, nums)
-                        if layout:
-                            w, h = float(it.width), float(it.height)
-                            txt = page_text_layout_ca(
-                                ca, WordSettings(),
-                                layout_bbox=(0.0, 0.0, w, h),
-                                layout_width=w, layout_height=h,
-                            )
-                        else:
-                            txt = page_text_ca(ca, WordSettings())
-                    else:
-                        txt = ""
-                    rows.append(
-                        (url, it.page_number, txt, n,
-                         txt.count(" ") + 1 if txt else 0, "ok", None)
-                    )
-                return rows
-            frames = pdf_to_frames(data, style=False)
-            pages_df = frames["pages"]
-            if len(pages_df) == 0:
+            interps = parse_pdf(data, style=False)
+            if not interps:
                 return [(url, 0, None, None, None, "error", "unparseable pdf")]
-            chars = frames["chars"]
-            page_groups = dict(iter(chars.groupby("page_number", sort=False)))
             rows = []
-            for pn, w, h in pages_df[["page_number", "width", "height"]].itertuples(
-                index=False
-            ):
-                sub = page_groups.get(pn, chars.iloc[0:0])
-                if dedupe and len(sub):
-                    from ..kernel.words import dedupe_chars_frame
-
-                    sub = dedupe_chars_frame(sub)
-                kwargs = {}
-                if layout:
-                    kwargs = dict(
-                        layout=True,
-                        layout_bbox=(0.0, 0.0, float(w), float(h)),
-                        layout_width=float(w),
-                        layout_height=float(h),
-                    )
-                txt = page_text(sub, WordSettings(), **kwargs)
+            for it in interps:
+                n = it.n_chars
+                if n:
+                    text = it.ch_text
+                    nums = np.frombuffer(
+                        it.ch_num, dtype=np.float64
+                    ).reshape(n, 12)
+                    if dedupe:
+                        # nums columns: size 0, upright 2, x0 3, doctop 9
+                        keep = dedupe_keep_mask(
+                            it.ch_font, nums[:, 0], nums[:, 2], text,
+                            nums[:, 9], nums[:, 3],
+                        )
+                        text = np.asarray(text, dtype=object)[keep]
+                        nums = nums[keep]
+                        n = len(text)
+                    ca = CharArrays.from_arrays(text, nums)
+                    if layout:
+                        w, h = float(it.width), float(it.height)
+                        txt = page_text_layout_ca(
+                            ca, WordSettings(),
+                            layout_bbox=(0.0, 0.0, w, h),
+                            layout_width=w, layout_height=h,
+                        )
+                    else:
+                        txt = page_text_ca(ca, WordSettings())
+                else:
+                    txt = ""
                 rows.append(
-                    (url, int(pn), txt, len(sub), txt.count(" ") + 1 if txt else 0,
-                     "ok", None)
+                    (url, it.page_number, txt, n,
+                     txt.count(" ") + 1 if txt else 0, "ok", None)
                 )
             return rows
         # HTML route
@@ -199,24 +208,13 @@ def extract_text(
     (reference PDF.open(repair=True), kernel/pdfrepair.py) — off by
     default, matching the reference's opt-in semantics.
     """
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            out = []
-            for url, payload in zip(batch["url"], batch["html"]):
-                out.extend(
-                    _payload_to_text_rows(url, payload, layout, dedupe, repair)
-                )
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "url", "page_number", "text", "n_chars", "n_words",
-                    "status", "error",
-                ],
-            )
-
-    src = partition_by_url(pages.select("url", "html"), num_partitions)
-    return src.mapInPandas(run, schema=EXTRACTED_SCHEMA)
+    return map_payloads(
+        pages,
+        lambda url, payload: _payload_to_text_rows(
+            url, payload, layout, dedupe, repair
+        ),
+        EXTRACTED_SCHEMA, num_partitions=num_partitions,
+    )
 
 
 def document_text(extracted: DataFrame) -> DataFrame:
@@ -350,22 +348,13 @@ def extract_objects(
     """pages -> unified objects DataFrame (char/line/rect/curve rows;
     plus textline*/textbox* rows and reading-order char indices when
     ``laparams`` is given — reference cli.py:56)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            outs = []
-            for url, payload in zip(batch["url"], batch["html"]):
-                obj = _payload_to_objects(url, payload, laparams=laparams)
-                if obj is not None:
-                    outs.append(obj)
-            yield (
-                pd.concat(outs, ignore_index=True)
-                if outs
-                else pd.DataFrame(columns=_OBJ_COLS)
-            )
-
-    src = partition_by_url(pages.select("url", "html"), num_partitions)
-    return src.mapInPandas(run, schema=OBJECTS_SCHEMA)
+    return map_payloads(
+        pages,
+        lambda url, payload: _as_list(
+            _payload_to_objects(url, payload, laparams=laparams)
+        ),
+        OBJECTS_SCHEMA, num_partitions=num_partitions,
+    )
 
 
 # --- words ------------------------------------------------------------------
@@ -401,21 +390,10 @@ def extract_words(
 ) -> DataFrame:
     """pages -> words DataFrame (per merge_chars semantics, text.py:490-514)."""
     s = settings or WordSettings()
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in WORDS_SCHEMA.fields]
-        for batch in batches:
-            outs = []
-            for url, payload in zip(batch["url"], batch["html"]):
-                outs.extend(_payload_to_word_frames(url, payload, s))
-            yield (
-                pd.concat(outs, ignore_index=True)
-                if outs
-                else pd.DataFrame(columns=cols)
-            )
-
-    src = partition_by_url(pages.select("url", "html"), num_partitions)
-    return src.mapInPandas(run, schema=WORDS_SCHEMA)
+    return map_payloads(
+        pages, lambda url, payload: _payload_to_word_frames(url, payload, s),
+        WORDS_SCHEMA, num_partitions=num_partitions,
+    )
 
 
 # --- tables -----------------------------------------------------------------
@@ -503,26 +481,44 @@ def extract_tables(
 ) -> DataFrame:
     """pages -> tables DataFrame
     (url, page_number, table_index, row_index, col_index, text, bbox)."""
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in TABLES_SCHEMA.fields]
-        for batch in batches:
-            out_rows = []
-            for url, payload in zip(batch["url"], batch["html"]):
-                out_rows.extend(
-                    _payload_to_table_rows(
-                        url, payload,
-                        vertical_strategy=vertical_strategy,
-                        horizontal_strategy=horizontal_strategy,
-                        **table_kwargs,
-                    )
-                )
-            yield pd.DataFrame(out_rows, columns=cols)
-
-    src = partition_by_url(pages.select("url", "html"), num_partitions)
-    return src.mapInPandas(run, schema=TABLES_SCHEMA)
+    return map_payloads(
+        pages,
+        lambda url, payload: _payload_to_table_rows(
+            url, payload,
+            vertical_strategy=vertical_strategy,
+            horizontal_strategy=horizontal_strategy,
+            **table_kwargs,
+        ),
+        TABLES_SCHEMA, num_partitions=num_partitions,
+    )
 
 
 # --- skew handling: mega-document page explosion (SCALE.md §2.1) -------------
+
+EXPLODED_SCHEMA = T.StructType(
+    [
+        T.StructField("url", T.StringType(), False),
+        T.StructField("page_base", T.IntegerType(), False),
+        T.StructField("html", T.BinaryType(), True),
+    ]
+)
+
+
+def _explode_payload(url: str, payload, page_threshold: int) -> list:
+    """Per-payload (url, page_base, html) rows: one 1-page payload per page
+    when the PDF has more than ``page_threshold`` pages, else the payload
+    itself with ``page_base`` 0."""
+    from ..kernel.pdfsplit import count_pages, split_pdf_pages
+
+    data = bytes(payload) if payload is not None else b""
+    if data[:5] == b"%PDF-" and count_pages(data) > page_threshold:
+        try:
+            parts = split_pdf_pages(data)
+        except Exception:  # noqa: BLE001
+            return [(url, 0, data)]
+        return [(url, i + 1, part) for i, part in enumerate(parts)]
+    return [(url, 0, payload)]
+
 
 def explode_skewed(
     pages: DataFrame,
@@ -536,37 +532,10 @@ def explode_skewed(
     page number for exploded rows, 0 for intact documents. The xref-only
     page count is cheap (~2 ms/page to split; stream bytes copied raw).
     """
-    from pyspark.sql import types as T
-
-    from ..kernel.pdfsplit import count_pages, split_pdf_pages
-
-    schema = T.StructType(
-        [
-            T.StructField("url", T.StringType(), False),
-            T.StructField("page_base", T.IntegerType(), False),
-            T.StructField("html", T.BinaryType(), True),
-        ]
+    return map_payloads(
+        pages, lambda url, payload: _explode_payload(url, payload, page_threshold),
+        EXPLODED_SCHEMA, num_partitions=num_partitions,
     )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            rows = []
-            for url, payload in zip(batch["url"], batch["html"]):
-                data = bytes(payload) if payload is not None else b""
-                if data[:5] == b"%PDF-" and count_pages(data) > page_threshold:
-                    try:
-                        parts = split_pdf_pages(data)
-                    except Exception:  # noqa: BLE001
-                        rows.append((url, 0, data))
-                        continue
-                    for i, part in enumerate(parts):
-                        rows.append((url, i + 1, part))
-                else:
-                    rows.append((url, 0, payload))
-            yield pd.DataFrame(rows, columns=["url", "page_base", "html"])
-
-    src = partition_by_url(pages.select("url", "html"), num_partitions)
-    return src.mapInPandas(run, schema=schema)
 
 
 def extract_text_salted(
@@ -576,14 +545,11 @@ def extract_text_salted(
     num_partitions: Optional[int] = None,
 ) -> DataFrame:
     """extract_text with mega-document page salting: skewed docs explode to
-    per-page rows BEFORE the parse stage; the second repartition spreads
-    the exploded pages across the cluster."""
-    exploded = explode_skewed(pages, page_threshold, num_partitions)
-    # second spread: exploded pages of one url get distinct partitions
-    # (explicit count for the same AQE-coalescing reason as partition_by_url)
-    exploded = exploded.repartition(
-        num_partitions or default_doc_partitions(exploded),
-        F.xxhash64("url", "page_base"),
+    per-page rows BEFORE the parse stage; the second spread gives the
+    exploded pages of one url distinct partitions."""
+    exploded = spread(
+        explode_skewed(pages, page_threshold, num_partitions),
+        F.xxhash64("url", "page_base"), num_partitions=num_partitions,
     )
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -597,13 +563,33 @@ def extract_text_salted(
                     # single-page payload: restore the original page number
                     rows = [(r[0], int(base)) + r[2:] for r in rows]
                 out.extend(rows)
-            yield pd.DataFrame(
-                out,
-                columns=["url", "page_number", "text", "n_chars", "n_words",
-                         "status", "error"],
-            )
+            yield pd.DataFrame(out, columns=EXTRACTED_SCHEMA.fieldNames())
 
     return exploded.mapInPandas(run, schema=EXTRACTED_SCHEMA)
+
+
+STRUCTURE_SCHEMA = T.StructType(
+    [
+        T.StructField("url", T.StringType(), False),
+        T.StructField("structure_json", T.StringType(), True),
+    ]
+)
+
+
+def _payload_to_structure_rows(
+    url: str, payload, with_text: bool = False, laparams=None
+) -> list:
+    """Per-payload (url, structure_json) row; NULL json when the tree walk
+    fails, no row for non-PDF payloads."""
+    from ..kernel.structure import tree_to_json
+
+    if payload is None or bytes(payload)[:5] != b"%PDF-":
+        return []
+    try:
+        return [(url, tree_to_json(bytes(payload), with_text=with_text,
+                                   laparams=laparams))]
+    except Exception:  # noqa: BLE001
+        return [(url, None)]
 
 
 def extract_structure(
@@ -614,75 +600,48 @@ def extract_structure(
     column (SURVEY §1.2: Spark has no recursive StructType). ``with_text``
     is the CLI --structure-text form (cli.py:75-93); ``laparams`` makes
     mcid text concatenation follow pdfminer reading order (cli.py:29)."""
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        [
-            T.StructField("url", T.StringType(), False),
-            T.StructField("structure_json", T.StringType(), True),
-        ]
+    return map_payloads(
+        pages,
+        lambda url, payload: _payload_to_structure_rows(
+            url, payload, with_text, laparams
+        ),
+        STRUCTURE_SCHEMA, num_partitions=num_partitions,
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..kernel.structure import tree_to_json
 
-        for batch in batches:
-            rows = []
-            for url, payload in zip(batch["url"], batch["html"]):
-                if payload is None or bytes(payload)[:5] != b"%PDF-":
-                    continue
-                try:
-                    rows.append(
-                        (url, tree_to_json(bytes(payload),
-                                           with_text=with_text,
-                                           laparams=laparams))
-                    )
-                except Exception:  # noqa: BLE001
-                    rows.append((url, None))
-            yield pd.DataFrame(rows, columns=["url", "structure_json"])
+PAGE_META_SCHEMA = T.StructType(
+    [
+        T.StructField("url", T.StringType(), False),
+        T.StructField("page_number", T.IntegerType(), False),
+        T.StructField("width", T.DoubleType(), True),
+        T.StructField("height", T.DoubleType(), True),
+        T.StructField("rotation", T.IntegerType(), True),
+    ]
+)
 
-    src = partition_by_url(pages.select("url", "html"), num_partitions)
-    return src.mapInPandas(run, schema=schema)
+
+def _payload_to_page_meta(url: str, payload) -> list:
+    """Per-payload page-geometry frame (PAGE_META_SCHEMA order) in a list;
+    empty for non-PDF or unparseable payloads."""
+    if payload is None or bytes(payload)[:5] != b"%PDF-":
+        return []
+    try:
+        meta = pdf_to_frames(bytes(payload), style=False)["pages"]
+    except Exception:  # noqa: BLE001
+        return []
+    m = meta.copy()
+    m["url"] = url
+    return [m[PAGE_META_SCHEMA.fieldNames()]]
 
 
 def extract_page_meta(
     pages: DataFrame, num_partitions: Optional[int] = None
 ) -> DataFrame:
     """pages -> (url, page_number, width, height, rotation) per PDF page."""
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        [
-            T.StructField("url", T.StringType(), False),
-            T.StructField("page_number", T.IntegerType(), False),
-            T.StructField("width", T.DoubleType(), True),
-            T.StructField("height", T.DoubleType(), True),
-            T.StructField("rotation", T.IntegerType(), True),
-        ]
+    return map_payloads(
+        pages, _payload_to_page_meta, PAGE_META_SCHEMA,
+        num_partitions=num_partitions,
     )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in schema.fields]
-        for batch in batches:
-            outs = []
-            for url, payload in zip(batch["url"], batch["html"]):
-                if payload is None or bytes(payload)[:5] != b"%PDF-":
-                    continue
-                try:
-                    meta = pdf_to_frames(bytes(payload), style=False)["pages"]
-                except Exception:  # noqa: BLE001
-                    continue
-                m = meta.copy()
-                m["url"] = url
-                outs.append(m[cols])
-            yield (
-                pd.concat(outs, ignore_index=True)
-                if outs
-                else pd.DataFrame(columns=cols)
-            )
-
-    src = partition_by_url(pages.select("url", "html"), num_partitions)
-    return src.mapInPandas(run, schema=schema)
 
 
 def with_doc_doctop(df: DataFrame, page_meta: DataFrame) -> DataFrame:
@@ -725,39 +684,44 @@ def _payload_to_metadata_rows(url: str, payload) -> list:
     ]
 
 
+METADATA_SCHEMA = T.StructType(
+    [
+        T.StructField("url", T.StringType(), False),
+        T.StructField("key", T.StringType(), False),
+        T.StructField("value", T.StringType(), True),
+    ]
+)
+
+
 def extract_metadata(
     pages: DataFrame, num_partitions: Optional[int] = None
 ) -> DataFrame:
     """pages -> (url, key, value) document-metadata rows. The MapType form
     is ``F.map_from_entries`` over this (SURVEY §2.1); the exploded form is
     the join/SQL-friendly one."""
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        [
-            T.StructField("url", T.StringType(), False),
-            T.StructField("key", T.StringType(), False),
-            T.StructField("value", T.StringType(), True),
-        ]
+    return map_payloads(
+        pages, _payload_to_metadata_rows, METADATA_SCHEMA,
+        num_partitions=num_partitions,
     )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            rows = []
-            for url, payload in zip(batch["url"], batch["html"]):
-                rows.extend(_payload_to_metadata_rows(url, payload))
-            yield pd.DataFrame(rows, columns=["url", "key", "value"])
-
-    src = partition_by_url(pages.select("url", "html"), num_partitions)
-    return src.mapInPandas(run, schema=schema)
 
 
 # --- annots / hyperlinks -----------------------------------------------------
 
-ANNOT_COLS = [
-    "url", "page_number", "x0", "top", "x1", "bottom", "doctop",
-    "uri", "title", "contents",
-]
+ANNOTS_SCHEMA = T.StructType(
+    [
+        T.StructField("url", T.StringType(), False),
+        T.StructField("page_number", T.IntegerType(), False),
+        T.StructField("x0", T.DoubleType(), True),
+        T.StructField("top", T.DoubleType(), True),
+        T.StructField("x1", T.DoubleType(), True),
+        T.StructField("bottom", T.DoubleType(), True),
+        T.StructField("doctop", T.DoubleType(), True),
+        T.StructField("uri", T.StringType(), True),
+        T.StructField("title", T.StringType(), True),
+        T.StructField("contents", T.StringType(), True),
+    ]
+)
+ANNOT_COLS = ANNOTS_SCHEMA.fieldNames()
 
 
 def _payload_to_annots(url: str, payload, cols=None) -> Optional[pd.DataFrame]:
@@ -783,39 +747,10 @@ def extract_annots(
 ) -> DataFrame:
     """pages -> annotation rows (``page.py:280-323``); ``hyperlinks_only``
     keeps rows with a uri (``page.py:321-323``)."""
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        [
-            T.StructField("url", T.StringType(), False),
-            T.StructField("page_number", T.IntegerType(), False),
-            T.StructField("x0", T.DoubleType(), True),
-            T.StructField("top", T.DoubleType(), True),
-            T.StructField("x1", T.DoubleType(), True),
-            T.StructField("bottom", T.DoubleType(), True),
-            T.StructField("doctop", T.DoubleType(), True),
-            T.StructField("uri", T.StringType(), True),
-            T.StructField("title", T.StringType(), True),
-            T.StructField("contents", T.StringType(), True),
-        ]
+    out = map_payloads(
+        pages, lambda url, payload: _as_list(_payload_to_annots(url, payload)),
+        ANNOTS_SCHEMA, num_partitions=num_partitions,
     )
-    cols = [f.name for f in schema.fields]
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            outs = []
-            for url, payload in zip(batch["url"], batch["html"]):
-                a = _payload_to_annots(url, payload, cols)
-                if a is not None:
-                    outs.append(a)
-            yield (
-                pd.concat(outs, ignore_index=True)
-                if outs
-                else pd.DataFrame(columns=cols)
-            )
-
-    src = partition_by_url(pages.select("url", "html"), num_partitions)
-    out = src.mapInPandas(run, schema=schema)
     if hyperlinks_only:
         out = out.where(F.col("uri").isNotNull())
     return out
@@ -829,7 +764,4 @@ def oracle_extract_text(payloads, layout: bool = False) -> pd.DataFrame:
     rows = []
     for url, payload in payloads:
         rows.extend(_payload_to_text_rows(url, payload, layout))
-    return pd.DataFrame(
-        rows,
-        columns=["url", "page_number", "text", "n_chars", "n_words", "status", "error"],
-    )
+    return pd.DataFrame(rows, columns=EXTRACTED_SCHEMA.fieldNames())

@@ -8,10 +8,10 @@ match rows with bboxes. One mapInPandas pass, partition-local.
 
 from __future__ import annotations
 
-from typing import Iterator, Optional
+from typing import Optional
 
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F, types as T
+from pyspark.sql import DataFrame, types as T
 
 from ..kernel.geom import frame_bbox
 from ..kernel.layout import (
@@ -21,6 +21,7 @@ from ..kernel.layout import (
 )
 from ..kernel.pdfparse import pdf_to_frames
 from ..kernel.words import WordSettings, extract_words_frame
+from .extract import map_payloads
 
 MATCHES_SCHEMA = T.StructType(
     [
@@ -110,23 +111,10 @@ def _payload_to_match_frames(url, payload, pattern, regex, case,
 
 
 def _run(pages, pattern, regex, case, strip_lines, num_partitions):
-    from .extract import partition_by_url
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in MATCHES_SCHEMA.fields]
-        for batch in batches:
-            outs = []
-            for url, payload in zip(batch["url"], batch["html"]):
-                outs.extend(
-                    _payload_to_match_frames(
-                        url, payload, pattern, regex, case, strip_lines
-                    )
-                )
-            yield (
-                pd.concat(outs, ignore_index=True)
-                if outs
-                else pd.DataFrame(columns=cols)
-            )
-
-    src = partition_by_url(pages.select("url", "html"), num_partitions)
-    return src.mapInPandas(run, schema=MATCHES_SCHEMA)
+    return map_payloads(
+        pages,
+        lambda url, payload: _payload_to_match_frames(
+            url, payload, pattern, regex, case, strip_lines
+        ),
+        MATCHES_SCHEMA, num_partitions=num_partitions,
+    )

@@ -63,3 +63,22 @@ def test_metrics_lineage_recorded(spark, corpus, tmp_path):
     assert len(m["kernel_version"]) == 16
     assert m["pages"] == m["pages_ok"] + m["pages_failed"]
     assert m["wall_sec"] > 0
+
+
+def test_empty_buckets_checkpoint_and_resume(spark, tmp_path):
+    """More buckets than urls: empty buckets record zero counts, the
+    summary sums them, and the resume call is a no-op."""
+    src = str(tmp_path / "two.parquet")
+    write_corpus_parquet(src, n_docs=2, seed=3)
+    out = str(tmp_path / "sparse")
+    first = C.run_extraction_checkpointed(spark, src, out, n_buckets=6)
+    assert first["buckets_this_run"] == 6
+    metrics = C.read_metrics(out)
+    empty = [m for m in metrics if m["pages"] == 0]
+    assert len(empty) >= 4
+    for m in empty:
+        assert (m["urls"], m["pages_ok"], m["pages_failed"]) == (0, 0, 0)
+    assert first["pages_ok"] == sum(m["pages_ok"] for m in metrics)
+    again = C.run_extraction_checkpointed(spark, src, out, n_buckets=6)
+    assert again["buckets_this_run"] == 0
+    assert again["pages"] == first["pages"]

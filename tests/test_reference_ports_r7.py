@@ -17,6 +17,8 @@ import pytest
 
 from pdfplumber_spark import api
 
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 PDFS = "/root/reference/tests/pdfs"
 DEMO = f"{PDFS}/pdffill-demo.pdf"
 SCOTUS = f"{PDFS}/scotus-transcript-p1.pdf"
@@ -32,7 +34,7 @@ _CSV_ROW9 = (
 def _cli(*argv) -> bytes:
     return subprocess.run(
         [sys.executable, "-m", "pdfplumber_spark.cli", *argv],
-        capture_output=True, check=True, cwd="/root/repo",
+        capture_output=True, check=True, cwd=REPO,
     ).stdout
 
 

@@ -10,6 +10,8 @@ truetype/cff/type1 glyph engines) across the whole real-world corpus.
 import glob
 import hashlib
 
+import pytest
+
 from pdfplumber_spark import api
 
 PDFS = sorted(glob.glob("/root/reference/tests/pdfs/*.pdf"))
@@ -28,6 +30,7 @@ DETERMINISM_SAMPLE = [
 ]
 
 
+@pytest.mark.needs_reference
 def test_every_reference_fixture_renders():
     assert len(PDFS) >= 50
     failures = {}

@@ -196,3 +196,33 @@ def test_quality_filter_corpus_split(spark):
     assert {r["reject_reason"] for r in rows if not r["keep"]} <= {
         "too_short", "low_alpha", "too_punct", "repetitive"
     }
+
+
+def test_winnow_table_string_ids_match_int_ids(spark):
+    """Ids pass through winnow_table positionally with their input type:
+    string ids give the same fingerprints as integer ids mapped through
+    the same order."""
+    from pyspark.sql import types as T
+
+    from pdfplumber_spark.operators.text_analysis import winnow_table
+
+    texts = [
+        "the exact same passage appears here and there",
+        "a completely different document about other things",
+        "short",
+        "",
+        "the exact same passage appears here once more",
+    ]
+    ids = [f"doc-{i}" for i in range(len(texts))]
+    by_str = winnow_table(spark.createDataFrame(
+        list(zip(ids, texts)), "doc_id string, text string"
+    ))
+    by_int = winnow_table(spark.createDataFrame(
+        list(zip(range(len(texts)), texts)), "doc_id long, text string"
+    ))
+    assert by_str.schema["doc_id"].dataType == T.StringType()
+    got = sorted(
+        (ids.index(r["doc_id"]), r["fingerprint"]) for r in by_str.collect()
+    )
+    exp = sorted((r["doc_id"], r["fingerprint"]) for r in by_int.collect())
+    assert got and got == exp
